@@ -164,7 +164,8 @@ private[graft] object QueriesGraph {
     // power-law graphs need. Triangle count must equal g4_triangles
     // bit-for-bit (the orientation changes WORK, never the answer);
     // n_wedges is the oriented wedge mass, the quantity the refinement
-    // shrinks (ProfileGraph --triangles measures the cut on a hub graph).
+    // shrinks (`graft.Profile graph --triangles` measures the cut on a hub
+    // graph).
     Q("g4_triangles_degree",
       (s, dir) => {
         val li = rd(s, dir, "lineitem").filter(col("l_orderkey") < 2000)

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.io.File
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,21 +10,8 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration;
     // the driver always runs the full registry)
     val only = args.drop(2).headOption.map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", ShmLocalDir.path())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark has no native
-      // type for; read as long (ns since epoch) and convert explicitly.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = GraftSession()
+    new File(outDir).mkdirs()
     // Dump queries on a small worker pool: Spark schedules concurrent jobs
     // from independent threads fine (each query writes its own directory),
     // and 4-way overlap cuts the gate's wall time ~2-3x — insurance against
@@ -51,21 +39,13 @@ object Verify {
       }
     tasks.foreach(_.get())
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     spark.stop()
   }
+
+  /** Writes the oracle SQL map as one JSON object. Jackson escapes every
+    * control character, so a tab or CR in builder-authored SQL cannot make
+    * the driver's json.load fail and silently zero the correctness gate. */
+  def writeOracleSql(path: String, sql: Map[String, String]): Unit =
+    new ObjectMapper().writeValue(new File(path), sql.asJava)
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   * footer gather — executor tasks constructing and shipping envelopes —
   * would fail with `Task not serializable` the first time a commit
   * crosses `graft.index.footerJobThreshold` (caught by
-  * ProfileFooterGather). The trait aliases every name below, so all
+  * `graft.Profile footer-gather`). The trait aliases every name below, so all
   * existing `VersionedTable.IntMM`-style call sites compile unchanged.
   */
 private[io] object FooterStats extends Serializable {
@@ -232,8 +232,8 @@ private[io] trait VersionedTableIndex { this: VersionedTable.type =>
     * envelope, and [[readRange]] prunes the file list of every surviving
     * dir before Spark opens anything.
     */
-  private[io] def gatherStats(spark: SparkSession, dir: String, statsCols: Seq[String],
-                          schema: org.apache.spark.sql.types.StructType): DirStats = {
+  private[graft] def gatherStats(spark: SparkSession, dir: String, statsCols: Seq[String],
+                             schema: org.apache.spark.sql.types.StructType): DirStats = {
     import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType, TimestampNTZType, TimestampType}
     if (statsCols.isEmpty) return DirStats(Map.empty, Map.empty)
     statsCols.foreach { c =>
@@ -271,7 +271,7 @@ private[io] trait VersionedTableIndex { this: VersionedTable.type =>
     // commit can land thousands of one-file dirs — read sequentially and
     // doubly (the pre-r18 shape) that was 2 opens × #files of driver
     // wall-clock per commit (measured ~50 s on a 2 405-dir era,
-    // ProfileEvoRead). Results reassemble in `files` order, so the side
+    // `graft.Profile evo-read`). Results reassemble in `files` order, so the side
     // file and every envelope fold stay byte-identical to the serial form.
     val footerInfo: Seq[(Map[String, MinMax], Map[String, Long], Long)] =
       if (files.size < footerJobThreshold(spark))
@@ -381,7 +381,7 @@ private[io] trait VersionedTableIndex { this: VersionedTable.type =>
     * (`graft.index.footerJobThreshold`) with a default far above anything
     * the bench fixtures produce: below it the pool's ~10 ms/file wins on
     * job-launch overhead; above it indexing scales with the cluster
-    * instead of the driver (measured in ProfileFooterGather).
+    * instead of the driver (measured by `graft.Profile footer-gather`).
     */
   private[io] def footerJobThreshold(spark: SparkSession): Int =
     spark.conf.getOption("graft.index.footerJobThreshold")
@@ -452,7 +452,7 @@ private[io] trait VersionedTableIndex { this: VersionedTable.type =>
       finally rdr.close()
     }.sum
 
-  private[io] def fileStatsPath(dirPath: String) = Paths.get(dirPath, "_filestats")
+  private[graft] def fileStatsPath(dirPath: String) = Paths.get(dirPath, "_filestats")
 
   /** The reserved per-file key carrying the file's footer ROW COUNT inside
     * `_filestats` (the stats entries are real column names; parquet

@@ -12,7 +12,7 @@ object Par {
     * task — explode/shingle/hash-heavy pipelines serialize on one core no
     * matter how wide the session is (measured: single 2-4 s one-task scan
     * stages under a13_heavy_hitters, the n-gram family, and the substring
-    * dedup family at local[32]).
+    * dedup family on 32 local cores).
     *
     * When the incoming frame has fewer partitions than the session's
     * parallelism, repartition round-robin BEFORE the heavy map work; a

@@ -791,8 +791,9 @@ object Dedup {
     * via raise_error, not as a silent null; callers with string keys should
     * dedup on a surrogate (e.g. Medallion.withScalableSurrogateId) first.
     *
-    * Measured (ProfileClusters --synthetic, local[32], cliques-plus-chain
-    * graphs, pair generation excluded): 1M nodes / 24.5M edges resolve
+    * Measured (`graft.Profile clusters --synthetic`, 32 local cores,
+    * cliques-plus-chain graphs, pair generation excluded): 1M nodes /
+    * 24.5M edges resolve
     * exactly via the finish path in 1.8 s; 5M nodes / 123M edges in
     * 12.4 s and 20M nodes / 490M edges in 88.9 s, both exactly through
     * ONE quotient level (labels ≈ local components → single-task

@@ -177,9 +177,9 @@ object Graph {
     * arboricity bound behind Chiba–Nishizeki / Schank–Wagner), so the
     * wedge volume — the quadratic term that dominates power-law graphs —
     * shrinks by the hub factor for ONE extra degree aggregate and two
-    * narrow joins. ProfileGraph --triangles measures both orientations on
-    * a hub-skewed graph; triangle counts are bit-identical, wedge mass is
-    * the difference.
+    * narrow joins. `graft.Profile graph --triangles` measures both
+    * orientations on a hub-skewed graph; triangle counts are bit-identical,
+    * wedge mass is the difference.
     *
     * Emits (n_edges, n_wedges, n_triangles) like [[triangleCount]];
     * n_wedges is the ORIENTED wedge count (the work actually enumerated),

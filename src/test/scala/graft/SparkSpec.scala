@@ -6,19 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM, one session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.local.dir", ShmLocalDir.path())
-      // exercise the library's extensions entry point: float_dot/portable_hll
-      // resolve in every suite without per-suite registration
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // four cores whatever the host: spec parallelism and the golden plans
+    // are pinned to local[4]
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
